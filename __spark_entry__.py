@@ -283,13 +283,14 @@ def q_crawl_cuckoo_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     definitely-new rows bypass the join, maybe-seen rows are exactly
     confirmed, so the output equals a plain anti-join (the oracle), while
     deletion support (unlike Bloom) is pinned in tests/test_cuckoo.py."""
+    from webcrawler_woc_spark.operators.bloom import tag_maybe_seen
     from webcrawler_woc_spark.operators.cuckoo import (
         PartitionedCuckoo,
         build_bucket_tables,
-        cuckoo_prefiltered_anti_join,
         merge_spark_tables,
     )
     from webcrawler_woc_spark.operators.fetch import with_url_hash
+    from webcrawler_woc_spark.operators.routing import prefiltered_anti_join
 
     docs = _docs(spark, sf_dir)
     h = (F.col("doc_id") % 10).cast("string")
@@ -307,7 +308,7 @@ def q_crawl_cuckoo_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cuckoo = PartitionedCuckoo(n_buckets=4, m=1 << 13)
     merge_spark_tables(cuckoo, build_bucket_tables(seen, n_buckets=4, m=1 << 13))
-    return cuckoo_prefiltered_anti_join(spark, cands, seen, cuckoo).select("url")
+    return prefiltered_anti_join(tag_maybe_seen(spark, cands, cuckoo), seen).select("url")
 
 
 def q_crawl_cuckoo_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -317,14 +318,15 @@ def q_crawl_cuckoo_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the active seen table. A full re-probe of all page urls must then
     schedule exactly the expired ones: output = the anti-join against the
     ACTIVE seen set, which is the oracle."""
+    from webcrawler_woc_spark.operators.bloom import tag_maybe_seen
     from webcrawler_woc_spark.operators.cuckoo import (
         PartitionedCuckoo,
         build_bucket_tables,
-        cuckoo_prefiltered_anti_join,
         delete_bucket_hashes,
         merge_spark_tables,
     )
     from webcrawler_woc_spark.operators.fetch import with_url_hash
+    from webcrawler_woc_spark.operators.routing import prefiltered_anti_join
 
     docs = _docs(spark, sf_dir)
     url = F.concat(
@@ -337,8 +339,8 @@ def q_crawl_cuckoo_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuckoo = PartitionedCuckoo(n_buckets=4, m=1 << 13)
     merge_spark_tables(cuckoo, build_bucket_tables(all_urls, n_buckets=4, m=1 << 13))
     delete_bucket_hashes(spark, cuckoo, expired.select("url_hash"))
-    return cuckoo_prefiltered_anti_join(
-        spark, all_urls.select("url", "url_hash"), active, cuckoo
+    return prefiltered_anti_join(
+        tag_maybe_seen(spark, all_urls.select("url", "url_hash"), cuckoo), active
     ).select("url")
 
 
@@ -1899,9 +1901,10 @@ def q_crawl_sharded_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_spark_tables,
     )
     from webcrawler_woc_spark.operators.fetch import with_url_hash
+    from webcrawler_woc_spark.operators.routing import prefiltered_anti_join
     from webcrawler_woc_spark.operators.sharded_probe import (
         save_sharded,
-        sharded_prefiltered_anti_join,
+        sharded_tag_maybe_seen,
     )
 
     docs = _docs(spark, sf_dir)
@@ -1922,7 +1925,7 @@ def q_crawl_sharded_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_spark_tables(cuckoo, build_bucket_tables(seen, n_buckets=4, m=1 << 13))
     sdir = tempfile.mkdtemp(prefix="wcw_sharded_seen_")
     save_sharded(cuckoo, sdir)
-    return sharded_prefiltered_anti_join(spark, cands, seen, sdir).select("url")
+    return prefiltered_anti_join(sharded_tag_maybe_seen(cands, sdir), seen).select("url")
 
 
 def q_dedup_editdistance(spark: SparkSession, sf_dir: str) -> DataFrame:

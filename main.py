@@ -132,20 +132,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--n-buckets", type=int, default=32)
     ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument(
-        "--seen-filter", choices=("bloom", "cuckoo"), default="bloom",
-        help="seen-set prefilter sketch ahead of the exact anti-join: bloom "
-             "(default) or cuckoo (deletable fingerprints; recrawl expiry). "
-             "--no-bloom disables the prefilter regardless",
-    )
-    ap.add_argument(
-        "--seen-probe", choices=("broadcast", "sharded"), default="broadcast",
-        help="how waves probe the seen filter: broadcast ships the whole "
-             "merged filter to every executor (default; cheap at small "
-             "scale); sharded keeps one sidecar file per hash bucket and "
-             "each probe task loads only its own bucket (the 10^10-URL "
-             "form, where the merged filter is too big to broadcast)",
-    )
-    ap.add_argument(
         "--sitemap-xml", action="store_true",
         help="no-depth mode: also parse XML sitemaps (urlset + one-level "
              "sitemapindex recursion) during wave-0 sitemap discovery; "
@@ -213,8 +199,6 @@ def main(argv: list[str] | None = None) -> int:
         strip_tracking=args.strip_tracking,
         n_buckets=args.n_buckets,
         use_bloom=not args.no_bloom,
-        seen_filter=args.seen_filter,
-        seen_probe=args.seen_probe,
         sitemap_xml=args.sitemap_xml,
         fetch_mode=args.fetch_mode,
         http_base=args.http_base,

@@ -9,13 +9,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from webcrawler_woc_spark.operators.bloom import tag_maybe_seen
 from webcrawler_woc_spark.operators.cuckoo import (
     CuckooTable,
     PartitionedCuckoo,
     build_bucket_tables,
-    cuckoo_prefiltered_anti_join,
     merge_spark_tables,
 )
+from webcrawler_woc_spark.operators.routing import prefiltered_anti_join
 
 
 def _hashes(seed: int, n: int) -> np.ndarray:
@@ -128,8 +129,8 @@ class TestPrefilteredAntiJoin:
         merge_spark_tables(c, build_bucket_tables(seen, n_buckets=2, m=1 << 10))
         got = sorted(
             r.url
-            for r in cuckoo_prefiltered_anti_join(
-                spark, cands, seen, c, candidates_rows=len(cand_urls)
+            for r in prefiltered_anti_join(
+                tag_maybe_seen(spark, cands, c), seen, small_rows=len(cand_urls)
             ).collect()
         )
         want = sorted(r.url for r in cands.join(seen, ["url"], "left_anti").collect())
@@ -140,52 +141,6 @@ class TestPrefilteredAntiJoin:
 def test_non_power_of_two_rejected(m):
     with pytest.raises(ValueError):
         CuckooTable(m)
-
-
-class TestCuckooSeenFilterInCrawl:
-    """seen_filter='cuckoo' drives the REAL crawl loop: results must be
-    identical to the bloom run (both prefilters are exact by construction),
-    the sidecar must persist/reload as a cuckoo, and a completed warehouse
-    must no-op on rerun."""
-
-    def test_crawl_parity_and_sidecar_roundtrip(self, spark, sf_dir):
-        import tempfile
-
-        from webcrawler_woc_spark.config import CrawlConfig
-        from webcrawler_woc_spark.operators.cuckoo import PartitionedCuckoo
-        from webcrawler_woc_spark.plans.crawl import crawl, read_crawl_order
-        from webcrawler_woc_spark.plans.state import Warehouse
-        from webcrawler_woc_spark.sources.corpus import pages_from_documents
-
-        pages = pages_from_documents(spark, sf_dir).cache()
-        pages.count()
-        seeds = [("http://host0.example/page/0", 1.0)]
-        wl = [f"host{i}.example" for i in range(5)]
-
-        def run(seen_filter, tmp):
-            cfg = CrawlConfig(whitelist=wl, depth=2, n_buckets=8, seen_filter=seen_filter)
-            wh = Warehouse(spark, tmp, n_buckets=8)
-            summary = crawl(spark, wh, pages, seeds, cfg)
-            order = sorted(
-                (r["wave"], r["host"], r["slot"], r["url"])
-                for r in read_crawl_order(wh).collect()
-            )
-            return wh, cfg, summary, order
-
-        with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
-            _, _, s_bloom, order_bloom = run("bloom", t1)
-            wh, cfg, s_cuckoo, order_cuckoo = run("cuckoo", t2)
-            assert order_cuckoo == order_bloom  # exact-prefilter parity
-            assert s_cuckoo["waves"] == s_bloom["waves"]
-            # sidecar persisted as a cuckoo and reloads as one
-            side = wh.load_seen_filter()
-            assert isinstance(side, PartitionedCuckoo)
-            info = wh.manifest["waves"][str(wh.last_wave)]
-            assert info["sidecar_kind"] == "cuckoo"
-            # rerun on the completed warehouse: clean no-op
-            rerun = crawl(spark, wh, pages, seeds, cfg)
-            assert rerun["waves"] == 0
-        pages.unpersist()
 
 
 class TestDistributedDeletion:
@@ -204,33 +159,6 @@ class TestDistributedDeletion:
 
 
 class TestReviewHardening:
-    def test_resume_with_mismatched_seen_filter_fails_fast(self, spark, sf_dir):
-        import tempfile
-
-        from webcrawler_woc_spark.config import CrawlConfig
-        from webcrawler_woc_spark.plans.crawl import crawl
-        from webcrawler_woc_spark.plans.state import Warehouse
-        from webcrawler_woc_spark.sources.corpus import pages_from_documents
-
-        pages = pages_from_documents(spark, sf_dir)
-        seeds = [("http://host0.example/page/0", 1.0)]
-        wl = [f"host{i}.example" for i in range(5)]
-        with tempfile.TemporaryDirectory() as tmp:
-            wh = Warehouse(spark, tmp, n_buckets=8)
-            crawl(spark, wh, pages, seeds,
-                  CrawlConfig(whitelist=wl, depth=1, n_buckets=8, seen_filter="cuckoo"))
-            # deeper rerun with the default bloom filter must refuse EARLY
-            with pytest.raises(ValueError, match="seen filter"):
-                crawl(spark, wh, pages, seeds,
-                      CrawlConfig(whitelist=wl, depth=2, n_buckets=8, seen_filter="bloom"))
-
-    def test_seen_filter_typo_rejected_even_with_use_bloom_false(self):
-        from webcrawler_woc_spark.config import CrawlConfig
-
-        cfg = CrawlConfig(seen_filter="cuckoos", use_bloom=False)
-        with pytest.raises(ValueError, match="cuckoos"):
-            cfg.seen_filter_kind()
-
     def test_stash_fp_multiset_deletion_keeps_survivor(self):
         """Two distinct hashes sharing a (fingerprint, pair) key both
         overflow to stash_fp; deleting one must keep the other's

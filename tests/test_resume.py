@@ -58,12 +58,17 @@ class TestResume:
 
             assert _state(wh_b) == _state(wh_full)
 
-    def test_bloom_sidecar_reloaded_on_resume(self, spark, pages):
+    def test_bloom_sidecar_reloaded_on_resume(self, spark, pages, monkeypatch):
+        import webcrawler_woc_spark.config as cfgmod
+
+        # the sidecar only exists on waves that probe the filter, i.e. once
+        # the cumulative seen rows exceed the broadcast threshold
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
         cfg = CrawlConfig(whitelist=WL, depth=2, use_bloom=True, n_buckets=8)
         with tempfile.TemporaryDirectory() as tmp:
             wh = Warehouse(spark, tmp, n_buckets=8)
             crawl(spark, wh, pages, SEEDS, cfg)
-            bloom = wh.load_bloom()
+            bloom = wh.load_seen_filter()
             assert bloom is not None
             # every seen url_hash must be in the bloom (no false negatives)
             import numpy as np
@@ -73,6 +78,52 @@ class TestResume:
                 dtype=np.int64,
             )
             assert bloom.might_contain(hashes).all()
+            # rerun on the completed warehouse: clean no-op
+            assert crawl(spark, wh, pages, SEEDS, cfg)["waves"] == 0
+
+    def test_missing_sidecar_rebuilt_from_seen(self, spark, pages, monkeypatch):
+        """A crawl whose earlier waves committed no sidecar (here: wave 0 ran
+        with the filter off) and then resumes with the filter probing must
+        rebuild the filter from the committed seen tables. A filter started
+        empty would miss the earlier seen URLs and crawl them again."""
+        import webcrawler_woc_spark.config as cfgmod
+
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
+        seeds = [("http://host0.example/page/10", 1.0)]
+        cfg = CrawlConfig(whitelist=WL, depth=4, use_bloom=True, n_buckets=8)
+        with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
+            wh_full = Warehouse(spark, t1, n_buckets=8)
+            crawl(spark, wh_full, pages, seeds, cfg)
+
+            wh = Warehouse(spark, t2, n_buckets=8)
+            crawl(spark, wh, pages, seeds,
+                  CrawlConfig(whitelist=WL, depth=1, use_bloom=False, n_buckets=8))
+            assert wh.manifest["waves"]["0"]["bloom"] is None
+            # drop the residual-flush pseudo-wave so wave 1 runs on resume
+            del wh.manifest["waves"]["1"]
+            wh.manifest["last_wave"] = 0
+            wh._commit_manifest()
+            wh = Warehouse(spark, t2, n_buckets=8)
+            crawl(spark, wh, pages, seeds, cfg)
+
+            _, order = _state(wh)
+            assert order == _state(wh_full)[1]
+            assert len({url for *_, url in order}) == len(order)  # no URL twice
+
+    def test_default_threshold_writes_no_sidecar(self, spark, pages):
+        """Below the broadcast threshold the wave never probes the filter,
+        so it builds and saves none: no sidecar, no bloom_update job."""
+        import os
+
+        cfg = CrawlConfig(whitelist=WL, depth=2, use_bloom=True, n_buckets=8)
+        with tempfile.TemporaryDirectory() as tmp:
+            wh = Warehouse(spark, tmp, n_buckets=8)
+            crawl(spark, wh, pages, SEEDS, cfg)
+            for w in ("0", "1"):
+                info = wh.manifest["waves"][w]
+                assert info["bloom"] is None
+                assert "bloom_update" not in info["timings"]
+            assert not [f for f in os.listdir(tmp) if f.endswith(".npz")]
 
     def test_manifest_lists_lineage(self, spark, pages):
         cfg = CrawlConfig(whitelist=WL, depth=1, use_bloom=False, n_buckets=8)
@@ -131,7 +182,7 @@ class TestMidWaveResume:
 
             # rerun the wave in a FRESH Warehouse (manifest re-read)
             wh_c = Warehouse(spark, t2, n_buckets=8)
-            counts = run_wave(spark, wh_c, pages, 0, cfg, bloom=None)
+            counts = run_wave(spark, wh_c, pages, 0, cfg)
             assert counts == counts_first == ref_counts
             for t, p in tables.items():
                 assert os.path.getmtime(os.path.join(p, "_SUCCESS")) == mtimes[t], (
@@ -172,7 +223,7 @@ class TestMidWaveResume:
             }
 
             wh_c = Warehouse(spark, t2, n_buckets=8)
-            counts = run_wave(spark, wh_c, pages, 0, cfg_new, bloom=None)
+            counts = run_wave(spark, wh_c, pages, 0, cfg_new)
             assert counts == wh_ref.wave_counts(0)  # new-cfg results, not stale
             for t, p in tables.items():
                 assert os.path.getmtime(os.path.join(p, "_SUCCESS")) != mtimes[t], (
@@ -210,7 +261,7 @@ class TestMidWaveResume:
             }
 
             wh_c = Warehouse(spark, t2, n_buckets=8)
-            run_wave(spark, wh_c, pages, 0, cfg, bloom=None, input_fp="")
+            run_wave(spark, wh_c, pages, 0, cfg, input_fp="")
             for t, p in tables.items():
                 assert os.path.getmtime(os.path.join(p, "_SUCCESS")) != mtimes[t], (
                     f"{t} kept a table from a different-input attempt"

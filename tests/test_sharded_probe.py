@@ -21,13 +21,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from webcrawler_woc_spark.operators.bloom import PartitionedBloom, bloom_prefiltered_anti_join
+from webcrawler_woc_spark.operators.bloom import PartitionedBloom, tag_maybe_seen
 from webcrawler_woc_spark.operators.cuckoo import PartitionedCuckoo
+from webcrawler_woc_spark.operators.routing import prefiltered_anti_join
 from webcrawler_woc_spark.operators.sharded_probe import (
     _make_probe_kernel,
     read_meta,
     save_sharded,
-    sharded_prefiltered_anti_join,
     sharded_tag_maybe_seen,
 )
 
@@ -90,7 +90,7 @@ def test_sharded_anti_join_matches_broadcast_and_exact(spark, tmp_path, kind):
 
     got = sorted(
         (r["url_hash"], r["url"])
-        for r in sharded_prefiltered_anti_join(spark, cand, seen, sdir).collect()
+        for r in prefiltered_anti_join(sharded_tag_maybe_seen(cand, sdir), seen).collect()
     )
     exact = sorted(
         (r["url_hash"], r["url"])
@@ -100,7 +100,7 @@ def test_sharded_anti_join_matches_broadcast_and_exact(spark, tmp_path, kind):
     if kind == "bloom":
         bc = sorted(
             (r["url_hash"], r["url"])
-            for r in bloom_prefiltered_anti_join(spark, cand, seen, filt).collect()
+            for r in prefiltered_anti_join(tag_maybe_seen(spark, cand, filt), seen).collect()
         )
         assert got == bc
 
@@ -156,50 +156,6 @@ def test_task_never_touches_foreign_bucket_e2e(spark, tmp_path, kind):
     }
     want = dict(zip(hs.tolist(), filt.might_contain(hs).tolist()))
     assert got == want
-
-
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_crawl_loop_sharded_probe_parity(spark, sf_dir, kind):
-    """seen_probe='sharded' drives the REAL crawl loop: crawl order and wave
-    counts must be identical to the broadcast-probe run (both probes answer
-    bit-for-bit the same filter), and every committed wave must carry a
-    sharded sidecar directory so the NEXT wave can probe without a
-    broadcast."""
-    import tempfile
-
-    from webcrawler_woc_spark.config import CrawlConfig
-    from webcrawler_woc_spark.plans.crawl import crawl, read_crawl_order
-    from webcrawler_woc_spark.plans.state import Warehouse
-    from webcrawler_woc_spark.sources.corpus import pages_from_documents
-
-    pages = pages_from_documents(spark, sf_dir).cache()
-    pages.count()
-    seeds = [("http://host0.example/page/0", 1.0)]
-    wl = [f"host{i}.example" for i in range(5)]
-
-    def run(seen_probe, tmp):
-        cfg = CrawlConfig(
-            whitelist=wl, depth=2, n_buckets=8,
-            seen_filter=kind, seen_probe=seen_probe,
-        )
-        wh = Warehouse(spark, tmp, n_buckets=8)
-        summary = crawl(spark, wh, pages, seeds, cfg)
-        order = sorted(
-            (r["wave"], r["host"], r["slot"], r["url"])
-            for r in read_crawl_order(wh).collect()
-        )
-        return wh, summary, order
-
-    with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
-        _, s_bc, order_bc = run("broadcast", t1)
-        wh, s_sh, order_sh = run("sharded", t2)
-        assert order_sh == order_bc
-        assert s_sh["waves"] == s_bc["waves"]
-        for w in range(wh.last_wave + 1):
-            d = wh.manifest["waves"][str(w)]["sharded_dir"]
-            assert d is not None and os.path.isdir(d)
-            assert read_meta(d)["kind"] == kind
-    pages.unpersist()
 
 
 def test_bucket_cache_invalidates_on_rewrite(tmp_path):

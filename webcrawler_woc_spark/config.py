@@ -40,7 +40,10 @@ class CrawlConfig:
       Crawl-delay is cached for a host, its effective budget is
       ``max(1, host_budget // crawl_delay)``.
     * ``n_buckets`` — url_hash bucket count for state-table partitioning.
-    * ``use_bloom`` — Bloom prefilter ahead of the exact seen anti-join.
+    * ``use_bloom`` — partitioned Bloom prefilter ahead of the exact seen
+      anti-join. It only runs on waves whose cumulative seen rows (from the
+      manifest) exceed ``BROADCAST_MAX_ROWS``; below that the exact
+      anti-join alone is cheaper, and no filter is built or saved.
     * ``timeout_ms`` — request-timeout simulation (reference cli.rs:34-35,
       default 10 s): matched pages whose synthetic latency exceeds this are
       fetch failures (op 27). ``None`` (default) disables the gate so fetch
@@ -54,18 +57,6 @@ class CrawlConfig:
     host_budget: int | None = None
     n_buckets: int = 32
     use_bloom: bool = True
-    # which sketch prefilters the seen anti-join: "bloom" (default) or
-    # "cuckoo" (deletable fingerprints — the recrawl/TTL-expiry story,
-    # operators/cuckoo.py); use_bloom=False disables the prefilter entirely
-    # regardless (legacy switch, kept for the --no-bloom CLI surface)
-    seen_filter: str = "bloom"
-    # how the wave PROBES the seen filter: "broadcast" ships the whole merged
-    # filter to every executor (cheap at sandbox scale); "sharded" writes the
-    # sidecar as one file per pmod(url_hash, n_buckets) bucket and each probe
-    # task loads only its own bucket's file (operators/sharded_probe.py) —
-    # the 10^10-URL form, where the merged filter (~20 GB at 16-bit cuckoo
-    # fingerprints) is too big to broadcast or hold per executor
-    seen_probe: str = "broadcast"
     timeout_ms: int | None = None
     # enforce robots.txt Disallow rules: frontier URLs whose path starts with
     # a disallowed prefix for their host are never scheduled (north-rule
@@ -101,19 +92,3 @@ class CrawlConfig:
     http_base: str | None = None
     http_max_per_host: int = 4
 
-    def seen_filter_kind(self) -> str | None:
-        """Effective seen-set prefilter: None (disabled), 'bloom', 'cuckoo'.
-        Validates seen_filter in EVERY mode — a typo must raise, not
-        silently run unprefiltered behind a use_bloom=False short-circuit."""
-        if self.seen_filter not in ("bloom", "cuckoo", "none"):
-            raise ValueError(f"unknown seen_filter: {self.seen_filter!r}")
-        if not self.use_bloom or self.seen_filter == "none":
-            return None
-        return self.seen_filter
-
-    def seen_probe_mode(self) -> str:
-        """Validated probe mode; 'sharded' only matters with a live filter
-        (seen_filter_kind() not None) but a typo must raise regardless."""
-        if self.seen_probe not in ("broadcast", "sharded"):
-            raise ValueError(f"unknown seen_probe: {self.seen_probe!r}")
-        return self.seen_probe

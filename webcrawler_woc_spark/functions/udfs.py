@@ -22,7 +22,7 @@ from .html import (
     links_from_text,
     sitemap_urls_from_robots,
 )
-from .urlnorm import host_of, normalize_url
+from .urlnorm import host_of
 
 
 def _decode(html) -> str:
@@ -31,14 +31,6 @@ def _decode(html) -> str:
     if isinstance(html, (bytes, bytearray)):
         return bytes(html).decode("utf-8", errors="replace")
     return str(html)
-
-
-@pandas_udf(StringType())
-def canonicalize_url_udf(href: pd.Series, base: pd.Series) -> pd.Series:
-    """normalize_url over a batch: canonical URL string or null (drop)."""
-    return pd.Series(
-        [normalize_url(h, b) for h, b in zip(href, base)], dtype="object"
-    )
 
 
 @pandas_udf(StringType())

@@ -2,9 +2,10 @@
 
 One Bloom bitmap per url_hash bucket (``bucket = pmod(url_hash, n_buckets)``),
 built distributed with ``applyInPandas`` (one small bitmap per bucket crosses
-the wire, never the URLs), OR-merged incrementally each wave with the bits of
-the newly-seen URLs, broadcast to executors, and probed by an Arrow-batched
-pandas UDF ahead of the exact left-anti join:
+the wire, never the URLs), OR-merged with the bits of each probing wave's
+newly-seen URLs (plans/wave.py), broadcast to executors, and probed by an
+Arrow-batched pandas UDF ahead of the exact left-anti join
+(routing.prefiltered_anti_join):
 
     definitely-new (bloom says no)  -> skip the anti-join entirely;
     maybe-seen     (bloom says yes) -> exact anti-join confirms.
@@ -54,7 +55,7 @@ def _test_bits(bitmap: np.ndarray, positions: np.ndarray) -> np.ndarray:
 class PartitionedBloom:
     """n_buckets Bloom bitmaps keyed by pmod(url_hash, n_buckets)."""
 
-    kind = "bloom"  # sidecar/dispatch tag (PartitionedCuckoo.kind = "cuckoo")
+    kind = "bloom"  # sharded_probe.save_sharded layout tag
 
     def __init__(self, n_buckets: int, m_bits: int = DEFAULT_BITS_PER_BUCKET, k: int = DEFAULT_K):
         self.n_buckets = n_buckets
@@ -126,52 +127,23 @@ def build_bucket_bitmaps(df: DataFrame, n_buckets: int, m_bits: int, k: int) -> 
     return [(r["bucket"], r["bitmap"]) for r in rows]
 
 
-def make_might_contain_udf(spark: SparkSession, bloom: PartitionedBloom):
-    """Broadcast the bitmaps; return an Arrow-batched membership UDF."""
-    bc = spark.sparkContext.broadcast(
-        {"n": bloom.n_buckets, "m": bloom.m_bits, "k": bloom.k,
-         "maps": {b: bm.tobytes() for b, bm in bloom.bitmaps.items()}}
-    )
+def make_might_contain_udf(spark: SparkSession, filt):
+    """Broadcast any seen filter with ``might_contain(hashes)``
+    (PartitionedBloom, PartitionedCuckoo); return an Arrow-batched
+    membership UDF. The broadcast pickles ``filt`` now, so later merges into
+    it never reach a probe planned before them; each python worker
+    unpickles it once and reuses it across batches."""
+    bc = spark.sparkContext.broadcast(filt)
 
     @pandas_udf(BooleanType())
     def might_contain(url_hash: pd.Series) -> pd.Series:
-        state = bc.value
-        local = PartitionedBloom(state["n"], state["m"], state["k"])
-        for b, blob in state["maps"].items():
-            local.bitmaps[b] = np.frombuffer(blob, dtype=np.uint8)
-        return pd.Series(local.might_contain(url_hash.to_numpy(np.int64)))
+        return pd.Series(bc.value.might_contain(url_hash.to_numpy(np.int64)))
 
     return might_contain
 
 
-def bloom_prefiltered_anti_join(
-    spark: SparkSession,
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom: PartitionedBloom | None,
-    candidates_rows: int | None = None,
-) -> DataFrame:
-    """candidates minus seen, with optional Bloom fast-path.
-
-    With a Bloom filter: definitely-new rows bypass the join entirely;
-    maybe-seen rows are confirmed by a scan-only exact anti-join
-    (routing.anti_join_scan: the cumulative seen table is scanned against a
-    broadcast of the small maybe-seen set, never shuffled). Without a bloom:
-    the same scan-only anti-join over all candidates.
-    """
-    from .routing import anti_join_scan
-
-    if bloom is None:
-        return anti_join_scan(candidates, seen, ["url_hash", "url"], small_rows=candidates_rows)
-    might = make_might_contain_udf(spark, bloom)
-    tagged = candidates.withColumn("_maybe_seen", might(F.col("url_hash")))
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    # the maybe-seen remainder is <= |candidates| (and with a healthy bloom,
-    # a small fraction of it) — the candidates count is a safe upper gate
-    confirmed_new = anti_join_scan(
-        tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-        seen,
-        ["url_hash", "url"],
-        small_rows=candidates_rows,
-    )
-    return definitely_new.unionByName(confirmed_new)
+def tag_maybe_seen(spark: SparkSession, candidates: DataFrame, filt) -> DataFrame:
+    """candidates + boolean ``_maybe_seen`` from the broadcast probe of
+    ``filt`` — the input routing.prefiltered_anti_join expects."""
+    might = make_might_contain_udf(spark, filt)
+    return candidates.withColumn("_maybe_seen", might(F.col("url_hash")))

@@ -5,8 +5,9 @@ the cuckoo half).
 Same outer shape as PartitionedBloom: one filter table per url_hash bucket
 (``bucket = pmod(url_hash, n_buckets)``), built distributed with
 ``applyInPandas`` (one small table per bucket crosses the wire, never the
-URLs), merged driver-side, broadcast to executors, and probed by an
-Arrow-batched pandas UDF ahead of the exact anti-join:
+URLs), merged driver-side, and probed ahead of the exact anti-join by the
+same broadcast UDF (bloom.tag_maybe_seen) or the file-per-bucket probe
+(sharded_probe.py), then routing.prefiltered_anti_join:
 
     definitely-new (cuckoo says no) -> skip the anti-join entirely;
     maybe-seen     (cuckoo says yes) -> exact anti-join confirms.
@@ -43,8 +44,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 DEFAULT_M_BUCKETS = 1 << 15  # 32768 4-slot buckets = 131072 slots / partition
 SLOTS = 4
@@ -106,9 +105,9 @@ class CuckooTable:
         repetition keeps every array<bigint> schema and npz layout intact)."""
         return sorted(h for h, c in self.stash.items() for _ in range(c))
 
-    # one (de)serialization contract for save/load, the probe UDF broadcast,
-    # and distributed deletion — field drift between four hand-rolled copies
-    # was the alternative
+    # one (de)serialization contract for load, the sharded probe and
+    # distributed deletion — field drift between hand-rolled copies was the
+    # alternative
     def to_state(self) -> dict:
         return {
             "table": self.table.tobytes(),
@@ -237,7 +236,7 @@ class PartitionedCuckoo:
     """n_buckets cuckoo tables keyed by pmod(url_hash, n_buckets) — the
     same partitioning contract as PartitionedBloom."""
 
-    kind = "cuckoo"  # sidecar/dispatch tag (PartitionedBloom.kind = "bloom")
+    kind = "cuckoo"  # sharded_probe.save_sharded layout tag
 
     def __init__(self, n_buckets: int, m: int = DEFAULT_M_BUCKETS):
         self.n_buckets = n_buckets
@@ -395,59 +394,3 @@ def delete_bucket_hashes(
             writable=True,
         )
     bc.unpersist()
-
-
-def make_might_contain_udf(spark: SparkSession, cuckoo: PartitionedCuckoo):
-    """Broadcast the tables; return an Arrow-batched membership UDF."""
-    bc = spark.sparkContext.broadcast(
-        {
-            "n": cuckoo.n_buckets,
-            "m": cuckoo.m,
-            "states": {b: t.to_state() for b, t in cuckoo.tables.items()},
-        }
-    )
-
-    # memoized per python worker: the filter is read-only in the probe, so
-    # rebuild it once per executor process, not once per Arrow batch (and
-    # from_state without writable — might_contain never writes the table;
-    # the bloom twin uses the same zero-copy pattern)
-    holder: list[PartitionedCuckoo] = []
-
-    @pandas_udf(BooleanType())
-    def might_contain(url_hash: pd.Series) -> pd.Series:
-        if not holder:
-            state = bc.value
-            local = PartitionedCuckoo(state["n"], state["m"])
-            for b, st in state["states"].items():
-                local.tables[b] = CuckooTable.from_state(state["m"], st)
-            holder.append(local)
-        return pd.Series(holder[0].might_contain(url_hash.to_numpy(np.int64)))
-
-    return might_contain
-
-
-def cuckoo_prefiltered_anti_join(
-    spark: SparkSession,
-    candidates: DataFrame,
-    seen: DataFrame,
-    cuckoo: PartitionedCuckoo | None,
-    candidates_rows: int | None = None,
-) -> DataFrame:
-    """candidates minus seen with the cuckoo fast-path — drop-in for
-    bloom_prefiltered_anti_join (same exactness argument: no false
-    negatives, so definitely-new rows skip the join; maybe-seen rows are
-    confirmed by the scan-only exact anti-join)."""
-    from .routing import anti_join_scan
-
-    if cuckoo is None:
-        return anti_join_scan(candidates, seen, ["url_hash", "url"], small_rows=candidates_rows)
-    might = make_might_contain_udf(spark, cuckoo)
-    tagged = candidates.withColumn("_maybe_seen", might(F.col("url_hash")))
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    confirmed_new = anti_join_scan(
-        tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-        seen,
-        ["url_hash", "url"],
-        small_rows=candidates_rows,
-    )
-    return definitely_new.unionByName(confirmed_new)

@@ -76,6 +76,22 @@ def anti_join_scan(
     return small.join(F.broadcast(hits), keys, "left_anti")
 
 
+def prefiltered_anti_join(
+    tagged: DataFrame, seen: DataFrame, small_rows: int | None = None
+) -> DataFrame:
+    """candidates minus ``seen``, where ``tagged`` is the candidates plus a
+    boolean ``_maybe_seen`` from a seen-filter probe (bloom.tag_maybe_seen
+    or sharded_probe.sharded_tag_maybe_seen). A filter never answers a false
+    negative, so definitely-new rows bypass the join; only the maybe-seen
+    remainder is confirmed by the scan-only exact anti-join. ``small_rows``
+    (|candidates|, an upper bound on the remainder) gates its broadcast."""
+    keys = ["url_hash", "url"]
+    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
+    maybe_seen = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
+    confirmed_new = anti_join_scan(maybe_seen, seen, keys, small_rows=small_rows)
+    return definitely_new.unionByName(confirmed_new)
+
+
 def dedup_wave(children: DataFrame) -> DataFrame:
     """Wave-level dedup by canonical URL (the reference's HashSet inserts).
 

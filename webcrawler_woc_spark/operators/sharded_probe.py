@@ -1,11 +1,12 @@
 """Bucket-sharded seen-filter probe — the 10^10-URL dual of the broadcast probe.
 
-``make_might_contain_udf`` (bloom.py / cuckoo.py) broadcasts the ENTIRE
-merged filter to every executor: correct and cheap at sandbox scale, but at
-the north-star design point (10^10 URLs, 16-bit cuckoo fingerprints) the
-merged filter is ~20 GB — too big to broadcast or hold per executor. This
-module inverts the data flow, mirroring the wire shape the per-bucket
-build/delete paths already use:
+A standalone operator (the ``crawl_sharded_seen`` contract query); the
+crawl loop probes by broadcast. ``bloom.make_might_contain_udf`` broadcasts
+the ENTIRE merged filter to every executor: correct and cheap at sandbox
+scale, but at the north-star design point (10^10 URLs, 16-bit cuckoo
+fingerprints) the merged filter is ~20 GB — too big to broadcast or hold
+per executor. This module inverts the data flow, mirroring the wire shape
+the per-bucket build/delete paths already use:
 
 * the filter lives AT REST as ONE SIDECAR FILE PER BUCKET
   (``bucket_00042.npz``) plus a tiny ``meta.json`` — written bucket-files
@@ -22,13 +23,12 @@ an O(filter) broadcast to every executor. At 10^10 URLs that trades a
 ~20 GB per-executor resident set for a candidates-sized shuffle; size
 ``n_buckets`` >= cluster parallelism there (e.g. 4096) so the groupBy
 saturates the cluster. ``sidecar_dir`` must be on storage every executor
-can read (sandbox: local FS; cluster: the warehouse's shared store, where
-the per-wave sidecars already live).
+can read (sandbox: local FS; cluster: a shared store).
 
 Exactness is inherited: the sharded probe answers bit-for-bit what the
-driver-held filter answers (parity-tested for both kinds), so the
-prefiltered anti-join remains exact — no false negatives, maybe-seen rows
-confirmed by the scan-only anti-join.
+driver-held filter answers (parity-tested for both kinds), so
+``routing.prefiltered_anti_join`` over its tagged output remains exact — no
+false negatives, maybe-seen rows confirmed by the scan-only anti-join.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
@@ -166,28 +166,3 @@ def sharded_tag_maybe_seen(candidates: DataFrame, sidecar_dir: str) -> DataFrame
         .groupBy("_bucket")
         .applyInPandas(kernel, schema=out_schema)
     )
-
-
-def sharded_prefiltered_anti_join(
-    spark: SparkSession,
-    candidates: DataFrame,
-    seen: DataFrame,
-    sidecar_dir: str,
-    candidates_rows: int | None = None,
-) -> DataFrame:
-    """candidates minus seen with the sharded fast-path — drop-in for
-    bloom_/cuckoo_prefiltered_anti_join, same exactness argument:
-    definitely-new rows (filter says no — never a false negative) bypass
-    the join; maybe-seen rows are confirmed by the scan-only exact
-    anti-join."""
-    from .routing import anti_join_scan
-
-    tagged = sharded_tag_maybe_seen(candidates, sidecar_dir)
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    confirmed_new = anti_join_scan(
-        tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-        seen,
-        ["url_hash", "url"],
-        small_rows=candidates_rows,
-    )
-    return definitely_new.unionByName(confirmed_new)

@@ -10,7 +10,8 @@ Maps the reference entry points (SURVEY.md §3):
 Resume: the warehouse manifest records the last committed wave; ``crawl``
 called on an existing warehouse continues from there (kill/resume test in
 tests/test_resume.py). Per the north rule every wave commit carries counts,
-per-host lineage and the Bloom sidecar.
+per-host lineage and, on waves that probe the seen filter, the Bloom
+sidecar (plans/wave.py loads or rebuilds it; the loop holds no filter).
 """
 
 from __future__ import annotations
@@ -24,28 +25,6 @@ from ..operators.politeness import parse_robots_crawl_delay
 from ..operators.sitemaps import sitemap_children
 from .state import Warehouse
 from .wave import run_wave
-
-
-
-def _load_seen_filter(wh: Warehouse, cfg: CrawlConfig):
-    """Load the seen-filter sidecar, REFUSING a kind mismatch: resuming a
-    cuckoo-written warehouse with --seen-filter bloom (or vice versa) would
-    feed the wrong object into the wave's update path and crash mid-wave
-    AFTER the table writes — fail fast with an actionable message instead.
-    A fresh warehouse (no sidecar yet) loads None and the requested kind is
-    built on the first wave."""
-    kind = cfg.seen_filter_kind()
-    if kind is None:
-        return None
-    side = wh.load_seen_filter()
-    side_kind = getattr(side, "kind", "bloom") if side is not None else None
-    if side is not None and side_kind != kind:
-        raise ValueError(
-            f"warehouse sidecar was written by the {side_kind!r} seen filter but "
-            f"this run requests {kind!r}; resume with the matching --seen-filter "
-            "(switching kinds mid-crawl requires rebuilding the sidecar)"
-        )
-    return side
 
 
 def seed_frontier(
@@ -94,7 +73,6 @@ def crawl(
 
         disallow = parse_robots_disallow(pages).cache()
 
-    bloom = _load_seen_filter(wh, cfg)
     seed_urls = [u for u, _ in seeds]
 
     # Mid-wave-resume identity: cfg alone doesn't pin a wave's outputs — the
@@ -116,10 +94,9 @@ def crawl(
         for wave in range(start_wave, cfg.depth):
             # depth mode never consults sitemaps (crawler.rs:30-31)
             counts = run_wave(
-                spark, wh, pages, wave, cfg, bloom, robots, None, content_type_expr,
+                spark, wh, pages, wave, cfg, robots, None, content_type_expr,
                 disallow, input_fp=input_fp,
             )
-            bloom = _load_seen_filter(wh, cfg)
             summary["waves"] += 1
             summary["scheduled_total"] += counts["scheduled"]
             last = wave
@@ -144,10 +121,9 @@ def crawl(
                 else None
             )
             counts = run_wave(
-                spark, wh, pages, wave, cfg, bloom, robots, extra, content_type_expr,
+                spark, wh, pages, wave, cfg, robots, extra, content_type_expr,
                 disallow, input_fp=input_fp,
             )
-            bloom = _load_seen_filter(wh, cfg)
             summary["waves"] += 1
             summary["scheduled_total"] += counts["scheduled"]
             wave += 1
@@ -185,11 +161,8 @@ def _flush_residual(wh: Warehouse, residual: DataFrame, final_wave: int) -> None
         "host_lineage": [],
         "wall_sec": 0.0,
         # the flush adds no new URLs: carry the previous wave's seen-filter
-        # sidecar forward, kind included (a cuckoo path loaded as a bloom
-        # would fail on the meta shape)
+        # sidecar forward
         "bloom": wh.manifest["waves"].get(str(final_wave - 1), {}).get("bloom"),
-        "sidecar_kind": wh.manifest["waves"].get(str(final_wave - 1), {}).get("sidecar_kind"),
-        "sharded_dir": wh.manifest["waves"].get(str(final_wave - 1), {}).get("sharded_dir"),
     }
     wh.manifest["last_wave"] = final_wave
     wh._commit_manifest()

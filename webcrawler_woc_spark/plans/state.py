@@ -9,9 +9,9 @@ snapshot-commit contract is implemented directly over parquet):
   records it — readers NEVER list directories, they read exactly the paths
   the manifest names, so a crash mid-write leaves at most invisible orphans;
 * the manifest stores per-wave row counts, per-host lineage, wall time and
-  the Bloom sidecar path => resumable from any completed wave
-  (north rule: "resumable from checkpoint with per-partition lineage +
-  metrics").
+  the Bloom sidecar path (``None`` on waves that did not probe the filter,
+  see plans/wave.py) => resumable from any completed wave (north rule:
+  "resumable from checkpoint with per-partition lineage + metrics").
 
 Tables: frontier, seen, rejected, links_out, flagged, crawl_order.
 State tables are repartitioned by ``pmod(url_hash, n_buckets)`` on write so
@@ -71,7 +71,7 @@ class Warehouse:
             # 10^9-URL wave still spreads across the full shuffle width.
             # Rows with equal pmod(url_hash, n_buckets) stay co-located in
             # one file, which is the at-rest property the bucketed readers
-            # (and the sharded-probe sidecar builder) rely on.
+            # rely on.
             df = df.repartition(F.pmod(F.col("url_hash"), F.lit(self.n_buckets)))
         df.write.mode("overwrite").parquet(path)
         return path
@@ -107,66 +107,35 @@ class Warehouse:
         wall_sec: float,
         bloom: PartitionedBloom | None,
         timings: dict | None = None,
-        sharded: bool = False,
     ) -> None:
         """Atomically record a completed wave (the Spark 'action barrier').
 
-        ``bloom`` is the seen-set prefilter sidecar and accepts EITHER
-        PartitionedBloom or PartitionedCuckoo (the manifest key keeps its
-        legacy name; ``sidecar_kind`` records which filter wrote it).
-        ``sharded=True`` additionally writes the file-per-bucket layout
-        (operators/sharded_probe.py) so the next wave can probe without
-        broadcasting the merged filter."""
+        ``bloom`` is the seen-set prefilter sidecar, saved next to the
+        tables; ``None`` (the wave did not probe the filter) records none."""
         bloom_path = None
-        kind = None
-        sharded_dir = None
         if bloom is not None:
-            kind = getattr(bloom, "kind", "bloom")
-            bloom_path = os.path.join(self.path, f"{kind}_wave_{wave}.npz")
+            bloom_path = os.path.join(self.path, f"bloom_wave_{wave}.npz")
             bloom.save(bloom_path)
-            if sharded:
-                from ..operators.sharded_probe import save_sharded
-
-                sharded_dir = os.path.join(self.path, f"{kind}_sharded_wave_{wave}")
-                save_sharded(bloom, sharded_dir)
         self.manifest["waves"][str(wave)] = {
             "tables": table_paths,
             "counts": counts,
             "host_lineage": host_lineage or [],
             "wall_sec": wall_sec,
             "bloom": bloom_path,
-            "sidecar_kind": kind,
-            "sharded_dir": sharded_dir,
             "timings": timings or {},
             "committed_at": time.time(),
         }
         self.manifest["last_wave"] = wave
         self._commit_manifest()
 
-    def load_seen_filter(self, wave: int | None = None):
-        """Seen-filter sidecar (bloom or cuckoo) of the latest (or given)
-        committed wave; None when the wave carried none."""
+    def load_seen_filter(self, wave: int | None = None) -> PartitionedBloom | None:
+        """Bloom sidecar of the latest (or given) committed wave; None when
+        that wave carried none."""
         last = self.manifest["last_wave"] if wave is None else wave
         info = self.manifest["waves"].get(str(last))
         if info and info.get("bloom") and os.path.exists(info["bloom"]):
-            if info.get("sidecar_kind") == "cuckoo":
-                from ..operators.cuckoo import PartitionedCuckoo
-
-                return PartitionedCuckoo.load(info["bloom"])
             return PartitionedBloom.load(info["bloom"])
         return None
-
-    def sharded_dir(self, wave: int | None = None) -> str | None:
-        """Latest (or given) committed wave's file-per-bucket sidecar dir,
-        None when that wave wasn't committed with sharded=True."""
-        last = self.manifest["last_wave"] if wave is None else wave
-        info = self.manifest["waves"].get(str(last))
-        d = info.get("sharded_dir") if info else None
-        return d if d and os.path.isdir(d) else None
-
-    def load_bloom(self, wave: int | None = None) -> PartitionedBloom | None:
-        """Legacy alias: the sidecar loader, whatever kind it holds."""
-        return self.load_seen_filter(wave)
 
     def destroy(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

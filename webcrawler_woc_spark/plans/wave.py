@@ -6,10 +6,17 @@ Maps the reference's wave body (src/crawler.rs:53-99 / 135-192) to:
     scheduled --left join pages (fetch sim)--> fetched
     fetched --MIME gate--> gated --pandas UDFs--> contains_words, child links
     children (+ sitemap children on wave 0 of no-depth) --wave dedup-->
-      --bloom prefilter + anti-join seen--> next frontier candidates
+      --anti-join seen (Bloom-prefiltered once seen outgrows a broadcast)-->
+        next frontier candidates
       --anti-join rejected--> newly rejected (emitted once)
     writes: links_out (self rows + rejected rows), flagged, seen += scheduled,
-            frontier_{w+1} = candidates ∪ deferred, crawl_order, lineage
+            frontier_{w+1} = candidates ∪ deferred, crawl_order, lineage,
+            and the Bloom sidecar on waves that probed it
+
+The seen filter is one PartitionedBloom probed by broadcast. A wave that
+probes it loads the previous wave's sidecar (or rebuilds the filter from
+the committed seen tables), merges its own scheduled URLs and saves the
+result; every other wave builds and saves nothing.
 
 Determinism: all order comes from explicit sorts (politeness slots); the
 wave barrier is the parquet write action; within-wave seen semantics are the
@@ -23,12 +30,17 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import CrawlConfig
-from ..operators.bloom import PartitionedBloom, bloom_prefiltered_anti_join
+from ..config import CrawlConfig, small_enough_to_broadcast
+from ..operators import bloom
 from ..operators.extract import extract_child_links, mime_ok
 from ..operators.fetch import fetch_join, with_host, with_url_hash
 from ..operators.politeness import crawl_order, schedule_wave
-from ..operators.routing import dedup_wave, route_children
+from ..operators.routing import (
+    anti_join_scan,
+    dedup_wave,
+    prefiltered_anti_join,
+    route_children,
+)
 from ..functions.udfs import link_type_col, make_contains_words_udf
 from .state import Warehouse
 
@@ -52,7 +64,6 @@ def run_wave(
     pages: DataFrame,
     wave: int,
     cfg: CrawlConfig,
-    bloom: PartitionedBloom | None,
     robots: DataFrame | None = None,
     extra_children: DataFrame | None = None,
     content_type_expr=None,
@@ -225,49 +236,31 @@ def run_wave(
         cfg.blacklist,
         children_rows=extracted,
     )
-    # seen anti-join with the sketch fast path (the sidecar covers waves <
-    # wave; bloom and cuckoo share the no-false-negative prefilter contract);
-    # then subtract THIS wave's scheduled urls (batch seen semantics).
-    # seen_probe="sharded" swaps the whole-filter broadcast for the
-    # file-per-bucket probe (each task loads only its own bucket — the
-    # 10^10-URL form); falls back to broadcast when no sharded sidecar is
-    # committed yet (wave 0, or a warehouse written in broadcast mode).
-    # scale-adaptive probe skip: the sketch prefilter (broadcast bitmaps +
-    # a pandas-UDF probe evaluated on BOTH union branches) pays for itself
-    # only once the cumulative seen set dwarfs the wave's candidates. While
-    # the whole seen set is itself broadcast-small, the exact anti-join
-    # alone is strictly cheaper — and by the no-false-negative contract the
-    # result is identical with or without the probe. The manifest's exact
-    # per-wave scheduled counts give the cumulative size for free. The
-    # sidecar UPDATE below is unconditional either way (resume contract).
-    from ..config import small_enough_to_broadcast as _bcast_ok
-
-    _seen_rows = sum(
+    # seen anti-join, with the Bloom probe ahead of it only when it pays: a
+    # broadcast filter plus a pandas UDF on both union branches wins only
+    # once the cumulative seen set dwarfs the wave's candidates. While the
+    # seen set is itself broadcast-small the exact anti-join alone is
+    # cheaper, and by the no-false-negative contract the result is the same
+    # either way. The manifest's per-wave scheduled counts give the
+    # cumulative size for free. Then subtract THIS wave's scheduled urls
+    # (batch seen semantics).
+    seen_rows = sum(
         int(info.get("counts", {}).get("scheduled", 0))
         for w, info in wh.manifest["waves"].items()
         if int(w) < wave
     )
-    probe_filter = bloom if not _bcast_ok(_seen_rows) else None
-    _sharded_dir = (
-        wh.sharded_dir() if cfg.seen_probe_mode() == "sharded" and bloom is not None else None
-    )
-    if _sharded_dir is not None:
-        from ..operators.sharded_probe import sharded_prefiltered_anti_join
-
-        sc_frontier = sharded_prefiltered_anti_join(
-            spark, sc_frontier, seen_prev, _sharded_dir, candidates_rows=extracted
-        )
-    elif probe_filter is not None and getattr(probe_filter, "kind", "bloom") == "cuckoo":
-        from ..operators.cuckoo import cuckoo_prefiltered_anti_join
-
-        sc_frontier = cuckoo_prefiltered_anti_join(
-            spark, sc_frontier, seen_prev, probe_filter, candidates_rows=extracted
+    seen_filter = None
+    if cfg.use_bloom and not small_enough_to_broadcast(seen_rows):
+        seen_filter = _seen_filter_before(wh, wave, seen_prev, cfg.n_buckets)
+        sc_frontier = prefiltered_anti_join(
+            bloom.tag_maybe_seen(spark, sc_frontier, seen_filter),
+            seen_prev,
+            small_rows=extracted,
         )
     else:
-        sc_frontier = bloom_prefiltered_anti_join(
-            spark, sc_frontier, seen_prev, probe_filter, candidates_rows=extracted
+        sc_frontier = anti_join_scan(
+            sc_frontier, seen_prev, ["url_hash", "url"], small_rows=extracted
         )
-    from ..config import small_enough_to_broadcast
 
     sched_keys = scheduled.select("url_hash", "url")
     if small_enough_to_broadcast(frontier_rows):  # |scheduled| <= |frontier|
@@ -405,30 +398,15 @@ def run_wave(
 
     # seen-filter update job, defined here so it can OVERLAP the write pool
     # below (it reads only the already-filled scheduled cache; the merged
-    # sidecar is persisted by commit_wave AFTER the pool joins). Both kinds
-    # build distributed (one small table/bitmap per bucket reaches the
-    # driver, never the URLs) and merge into the running filter.
-    kind = cfg.seen_filter_kind()
-    _filter_update = None
-    if kind == "bloom":
-        if bloom is None:
-            bloom = PartitionedBloom(cfg.n_buckets)
-        from ..operators.bloom import build_bucket_bitmaps
-
-        def _filter_update(b=bloom):
-            rows = build_bucket_bitmaps(new_seen, b.n_buckets, b.m_bits, b.k)
-            b.merge_spark_bitmaps(rows)
-
-    elif kind == "cuckoo":
-        if bloom is None:
-            from ..operators.cuckoo import PartitionedCuckoo
-
-            bloom = PartitionedCuckoo(cfg.n_buckets)
-        from ..operators.cuckoo import build_bucket_tables, merge_spark_tables
-
-        def _filter_update(b=bloom):
-            rows = build_bucket_tables(new_seen, b.n_buckets, b.m)
-            merge_spark_tables(b, rows)
+    # sidecar is persisted by commit_wave AFTER the pool joins). The build is
+    # distributed: one small bitmap per bucket reaches the driver, never the
+    # URLs. The probe above broadcast its own copy of the filter, so merging
+    # into it here cannot race the probe.
+    def _filter_update():
+        rows = bloom.build_bucket_bitmaps(
+            new_seen, seen_filter.n_buckets, seen_filter.m_bits, seen_filter.k
+        )
+        seen_filter.merge_spark_bitmaps(rows)
 
     def _lineage_job():
         return [
@@ -443,8 +421,8 @@ def run_wave(
     table_paths = {}
     # one pool slot per job: every input is cached, so the jobs only
     # contend for executor cores, and the block is bounded by the slowest
-    # single write. The three metric/sidecar jobs (frontier-in count, host
-    # lineage, seen-filter build) read only filled caches / tiny parquet,
+    # single write. The metric/sidecar jobs (frontier-in count, host
+    # lineage, seen-filter update) read only filled caches / tiny parquet,
     # so they back-fill cores the write tail leaves idle (guide §2.6)
     # instead of running sequentially after the pool.
     with ThreadPoolExecutor(max_workers=len(writes) + 3) as pool:
@@ -458,7 +436,7 @@ def run_wave(
         f_lineage = pool.submit(_timed, "c_lineage", _lineage_job)
         f_filter = (
             pool.submit(_timed, "bloom_update", _filter_update)
-            if _filter_update is not None
+            if seen_filter is not None
             else None
         )
         for table, fut in futs.items():
@@ -497,8 +475,7 @@ def run_wave(
         "new_rejected": new_rejected_n,
     }
     wh.commit_wave(
-        wave, table_paths, counts, host_lineage, time.time() - t0, bloom, timings,
-        sharded=cfg.seen_probe_mode() == "sharded",
+        wave, table_paths, counts, host_lineage, time.time() - t0, seen_filter, timings
     )
     try:
         _os.remove(staging_path)  # the wave is committed; the sidecar is spent
@@ -518,6 +495,22 @@ def run_wave(
     deduped.unpersist()
     newly_rejected.unpersist()
     return counts
+
+
+def _seen_filter_before(
+    wh: Warehouse, wave: int, seen_prev: DataFrame, n_buckets: int
+) -> bloom.PartitionedBloom:
+    """The Bloom filter over every URL seen before ``wave``: the previous
+    wave's sidecar, or, when that wave did not probe (the seen set just
+    crossed the threshold, or the crawl resumed with the filter newly on),
+    one distributed build over ``seen_prev``, the committed seen tables."""
+    filt = wh.load_seen_filter(wave - 1)
+    if filt is None:
+        filt = bloom.PartitionedBloom(n_buckets)
+        filt.merge_spark_bitmaps(
+            bloom.build_bucket_bitmaps(seen_prev, filt.n_buckets, filt.m_bits, filt.k)
+        )
+    return filt
 
 
 def _release_local_checkpoint(df) -> None:
